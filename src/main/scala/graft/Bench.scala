@@ -1,9 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Session.envCpus(4)
     // SPARK_GRAFT_BENCH: "both" (default) runs a WARM pass (shared Layer
     // intermediates amortize across queries — the round-over-round trend
     // line) and then a COLD pass (Layer.clear before every query, so no
@@ -18,15 +17,7 @@ object Bench {
     // for local iteration (empty/unset = all queries, the driver's config).
     val only = sys.env.getOrElse("SPARK_GRAFT_BENCH_ONLY", "")
       .split(',').map(_.trim).filter(_.nonEmpty).toSet
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus)
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     // Contention-immune companion metric: cumulative executor task time
     // (taskMetrics.executorRunTime, ms) attributed per query by

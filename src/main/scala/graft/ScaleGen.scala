@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scaling-measurement corpus generator (SCALE.md): writes a synthetic
@@ -127,14 +126,7 @@ object ScaleGen {
     val boost = dupBoost.getOrElse(1)
     val exactMod = math.max(2, 625 / boost)
     val nearMod = math.max(3, 400 / boost)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.envCpus(8), 32)
 
     val vocabCol = array(vocab.map(lit): _*)
 

@@ -1211,10 +1211,7 @@ object Similarity {
     * contract; a fully-null embedding row is skipped, matching the old
     * inline-over-null behavior).
     */
-  private val embSpreadParts =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-
-  private def momentSums(spark: SparkSession, dir: String): DataFrame =
+  private[graft] def momentSums(spark: SparkSession, dir: String): DataFrame =
     graft.Layer.cached(spark, dir, "momentSums") {
       import spark.implicits._
       // The embeddings parquet is ONE split at the gate SFs, so the corpus
@@ -1228,16 +1225,7 @@ object Similarity {
       val e = Tables.embeddings(spark, dir)
         .select(col("vec_id"), transform(col("embedding"),
           v => floor(v.cast("double") * 10000d + 0.5d).cast("long")).as("q"))
-      val n = embSpreadParts.computeIfAbsent(dir, _ => {
-        val p = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val bytes = try fs.getContentSummary(p).getLength catch { case _: Exception => 0L }
-        val target = 32L << 10
-        val cap = spark.sessionState.conf.numShufflePartitions.toLong
-        val want = math.max(1L, math.min(cap, (bytes + target - 1) / target))
-        val scanSplits = bytes / spark.sessionState.conf.filesMaxPartitionBytes
-        (if (scanSplits >= want) 0L else want).toInt // 0 = scan already wide
-      })
+      val n = graft.Sizing.spread(spark, s"$dir/embeddings.parquet", 32L << 10)
       val spread = if (n <= 1) e else e.repartition(n, col("vec_id"))
       // Per-partition primitive-array kernel (the ridgeMoments posture)
       // instead of exploding d(d+3)/2 structs per row through a hash

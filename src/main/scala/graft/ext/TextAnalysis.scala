@@ -48,10 +48,10 @@ object TextAnalysis {
     * single straggler task (measured r16: 2.5–3.4 s max task on x107/
     * x140/x155/x224/x182 while the other 31 cores idled). Here the docs
     * frame hash-repartitions by doc_id into ceil(bytes / 32 KiB)
-    * partitions, capped by the session's cluster-sized
-    * `spark.sql.shuffle.partitions` — and the repartition is SKIPPED
-    * whenever the scan itself already splits at least that wide
-    * (bytes / maxPartitionBytes ≥ cap), so at fleet scale the corpus is
+    * partitions ([[graft.Sizing.spread]]), capped by the session's
+    * cluster-sized `spark.sql.shuffle.partitions` — and the repartition
+    * is SKIPPED whenever the scan itself already splits at least that
+    * wide (bytes / maxPartitionBytes ≥ width), so at fleet scale the corpus is
     * never shuffled for parallelism it already has: the plan there is
     * byte-identical to the r15 shape. doc_id hashing is deterministic
     * (no round-robin/rand — SPARK-38388 posture) and every consumer
@@ -73,19 +73,9 @@ object TextAnalysis {
     * persist the stream" law is untouched: this caches doc-grain rows,
     * never the corpus-positions explode.)
     */
-  private val docSpreadParts = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
   private def docsSpread(spark: SparkSession, dir: String): DataFrame = {
     val df = Tables.documents(spark, dir)
-    val n = docSpreadParts.computeIfAbsent(dir, _ => {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val bytes = try fs.getContentSummary(p).getLength catch { case _: Exception => 0L }
-      val target = 32L << 10
-      val cap = spark.sessionState.conf.numShufflePartitions.toLong
-      val want = math.max(1L, math.min(cap, (bytes + target - 1) / target))
-      val scanSplits = bytes / spark.sessionState.conf.filesMaxPartitionBytes
-      (if (scanSplits >= want) 0L else want).toInt // 0 = scan already wide
-    })
+    val n = graft.Sizing.spread(spark, s"$dir/documents.parquet", 32L << 10)
     if (n <= 1) withTokens(df)
     else Layer.cached(spark, dir, "docs_spread")(
       withTokens(df.repartition(n, col("doc_id")))
@@ -199,15 +189,16 @@ object TextAnalysis {
   /** Largest vocab-side relation the family explicitly broadcasts: 4 M
     * rows ≈ ≤ ~400 MB framed at the observed ~100 B/row (two short tokens
     * + BIGINT) — inside the guide's "a few hundred MB is usually fine"
-    * envelope and far under Spark's 8 GB / 512 M-row hard cap. Env dial
-    * for operators: SPARK_GRAFT_VOCAB_BCAST_BUDGET.
+    * envelope and far under Spark's 8 GB / 512 M-row hard cap.
     */
-  private[graft] def VocabBroadcastBudget: Long =
-    sys.env.get("SPARK_GRAFT_VOCAB_BCAST_BUDGET").map(_.toLong)
-      .getOrElse(4000000L)
+  private[graft] val VocabBroadcastBudget: Long = 4000000L
+
+  /** The vocab broadcast gate as a pure predicate: budget-inclusive. */
+  private[graft] def vocabFits(rows: Long, budget: Long = VocabBroadcastBudget): Boolean =
+    rows <= budget
 
   private def bcastIfVocabFits(df: DataFrame, rows: Long): DataFrame =
-    if (rows <= VocabBroadcastBudget) broadcast(df) else df
+    if (vocabFits(rows)) broadcast(df) else df
 
   /** X4 token statistics: token count, type-token ratio, stopword ratio,
     * mean token length. One projection pass, no shuffle.

@@ -414,11 +414,7 @@ object Graph {
     * and every gate corpus sits orders of magnitude below the budget so
     * routed and unrouted plans coincide there.
     */
-  private[graft] def HubDegreeBudget: Long =
-    sys.env.get("SPARK_GRAFT_HUB_BUDGET").map(_.toLong)
-      .getOrElse(1000000L) // r14: env dial (PAIR_BUDGET precedent) so the
-                           // routed/unrouted A/B can run on the FIXED plan
-                           // without a rebuild; default unchanged
+  private[graft] val HubDegreeBudget: Long = 1000000L
 
   /** Node-count FLOOR below which hub routing never engages (round-14).
     * The hub split's premise is that the per-round state join is a REAL
@@ -440,11 +436,10 @@ object Graph {
     * + AQE; floor < n ≤ GraphBroadcastNodeBudget → whole-state-frame
     * broadcast (measured better still); above → hub routing. The
     * planted-fixture laws keep every channel correct by forcing the
-    * floor to 0 in tests. Env dial: SPARK_GRAFT_HUB_MIN_NODES.
+    * floor to 0 in tests (every channel entry point takes the floor, the
+    * budgets and the hub degree as parameters).
     */
-  private[graft] def HubRoutingMinNodes: Long =
-    sys.env.get("SPARK_GRAFT_HUB_MIN_NODES").map(_.toLong)
-      .getOrElse(625000L)
+  private[graft] val HubRoutingMinNodes: Long = 625000L
 
   /** Degree-probed hub set: node ids whose symmetric-edge count exceeds
     * the budget. One aggregate + a hub-sized driver boundary (the L3
@@ -689,13 +684,10 @@ object Graph {
     * explicit broadcast is the plan; above it per-round re-broadcast
     * cost and executor memory take over and HUB ROUTING is the scale
     * path (measured winning 1.4–1.7× over unrouted at 2 M and 5 M
-    * nodes — SCALE.md r15). Env dial: SPARK_GRAFT_GRAPH_BCAST_BUDGET.
-    * Three-channel row-for-row equivalence is pinned in OpsSpec
-    * regardless of the dial.
+    * nodes — SCALE.md r15). Three-channel row-for-row equivalence is
+    * pinned in OpsSpec with the budget forced through the parameter.
     */
-  private[graft] def GraphBroadcastNodeBudget: Long =
-    sys.env.get("SPARK_GRAFT_GRAPH_BCAST_BUDGET").map(_.toLong)
-      .getOrElse(4000000L)
+  private[graft] val GraphBroadcastNodeBudget: Long = 4000000L
 
   /** The band-gate decision as a pure function (r16, pinned in PlansSpec):
     * the whole-state-frame broadcast channel engages strictly INSIDE

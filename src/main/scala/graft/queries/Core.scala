@@ -358,11 +358,13 @@ object Core {
     val (to, tl) = (s"graft_q25_orders_$tag", s"graft_q25_lineitem_$tag")
     // a FRESH JVM's in-memory catalog doesn't know a previous run's
     // tables, so overwrite mode can't reclaim their on-disk locations —
-    // drop the entry AND the orphaned directory before writing
+    // drop the entry AND the orphaned directory (wherever the session's
+    // warehouse puts the table) before writing
     Seq(to, tl).foreach { t =>
       spark.sql(s"DROP TABLE IF EXISTS $t")
-      graft.RunScoped.deleteRecursively(
-        java.nio.file.Paths.get(s"spark-warehouse/$t"))
+      val loc = new org.apache.hadoop.fs.Path(spark.sessionState.catalog
+        .defaultTablePath(org.apache.spark.sql.catalyst.TableIdentifier(t)))
+      loc.getFileSystem(spark.sessionState.newHadoopConf()).delete(loc, true)
     }
     graft.sources.Sinks.bucketedTable(
       Tables.orders(spark, dir)
@@ -542,8 +544,7 @@ object Core {
     * cannot promise that.
     */
   def q31CatalogRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.graft.root", s"$ioDir/catalog")
+    graft.Session.registerCatalog(spark)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.db")
     spark.sql("DROP TABLE IF EXISTS graft.db.order_counts")
     spark.sql("CREATE TABLE graft.db.order_counts USING graftkv")
@@ -570,8 +571,7 @@ object Core {
     * vacuum keeps the current view intact).
     */
   def q32TimeTravel(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.graft.root", s"$ioDir/catalog")
+    graft.Session.registerCatalog(spark)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.db")
     spark.sql("DROP TABLE IF EXISTS graft.db.rev_hist")
     spark.sql("CREATE TABLE graft.db.rev_hist USING graftkv")
@@ -666,8 +666,7 @@ object Core {
     * manifest clock fresh under bench replays.
     */
   def q35TimestampTravel(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.graft.root", s"$ioDir/catalog")
+    graft.Session.registerCatalog(spark)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.db")
     spark.sql("DROP TABLE IF EXISTS graft.db.day_counts")
     spark.sql("CREATE TABLE graft.db.day_counts USING graftkv")
@@ -709,8 +708,7 @@ object Core {
     * exactly because no wall-clock value appears in a compared column.
     */
   def q36History(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.graft.root", s"$ioDir/catalog")
+    graft.Session.registerCatalog(spark)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.db")
     spark.sql("DROP TABLE IF EXISTS graft.db.hist_demo")
     spark.sql("CREATE TABLE graft.db.hist_demo USING graftkv")
@@ -741,8 +739,7 @@ object Core {
     * storage schema cannot hold — v carries the exact integer cents.
     */
   def q37SqlMerge(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.graft.root", s"$ioDir/catalog")
+    graft.Session.registerCatalog(spark)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.db")
     spark.sql("DROP TABLE IF EXISTS graft.db.merge_t")
     spark.sql("CREATE TABLE graft.db.merge_t USING graftkv")
@@ -774,8 +771,7 @@ object Core {
     * pre-mutation versions still serve).
     */
   def q38SqlDeleteUpdate(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.graft.root", s"$ioDir/catalog")
+    graft.Session.registerCatalog(spark)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.db")
     spark.sql("DROP TABLE IF EXISTS graft.db.rl_t")
     spark.sql("CREATE TABLE graft.db.rl_t USING graftkv")
@@ -797,8 +793,7 @@ object Core {
     * version stays readable (structure pinned in SourcesSpec).
     */
   def q39Compaction(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.graft.root", s"$ioDir/catalog")
+    graft.Session.registerCatalog(spark)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.db")
     spark.sql("DROP TABLE IF EXISTS graft.db.compact_t")
     spark.sql("CREATE TABLE graft.db.compact_t USING graftkv")
@@ -826,8 +821,7 @@ object Core {
     * pinned in SourcesSpec.
     */
   def q40CallProcedures(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.graft.root", s"$ioDir/catalog")
+    graft.Session.registerCatalog(spark)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.db")
     spark.sql("DROP TABLE IF EXISTS graft.db.call_t")
     spark.sql("CREATE TABLE graft.db.call_t USING graftkv")
@@ -857,8 +851,7 @@ object Core {
     * table.
     */
   def q41KvSkipping(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.graft.root", s"$ioDir/catalog")
+    graft.Session.registerCatalog(spark)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.db")
     spark.sql("DROP TABLE IF EXISTS graft.db.skip_t")
     spark.sql("CREATE TABLE graft.db.skip_t USING graftkv")

@@ -42,7 +42,7 @@ object Sinks {
     val bytes =
       if (scannedBytes > 0) scannedBytes
       else df.count() * 256L // conservative fallback: ~256 B/row estimate
-    val files = math.max(1, math.ceil(bytes.toDouble / targetBytesPerFile).toInt)
+    val files = graft.Sizing.partitions(bytes, targetBytesPerFile, Int.MaxValue)
     df.repartition(files).write.mode(SaveMode.Overwrite).parquet(path)
   }
 

@@ -31,23 +31,13 @@ object Streams {
     * derived 2 partitions → 2.7 task-s, wall 11.2 → 2.7 s, identical rows.
     * At fleet scale the derivation grows with the input and is capped by the
     * session value (the cluster-tuned parallelism), so real state volume
-    * still spreads; `SPARK_GRAFT_STREAM_SHUFFLE` overrides for operations.
-    * Stateful checkpoints record the count in their own metadata, so pinned
-    * checkpoints (s21/s22) stay self-consistent across restarts by Spark's
-    * own recovery contract.
+    * still spreads; the floor is 2. Stateful checkpoints record the count
+    * in their own metadata, so pinned checkpoints (s21/s22) stay
+    * self-consistent across restarts by Spark's own recovery contract.
     */
-  private val derivedPartitions = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
   private def statePartitions(spark: SparkSession, dir: String): Int =
-    derivedPartitions.computeIfAbsent(dir, _ => {
-      sys.env.get("SPARK_GRAFT_STREAM_SHUFFLE").map(s => Integer.valueOf(s.trim.toInt)).getOrElse {
-        val p = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val bytes = try fs.getContentSummary(p).getLength catch { case _: Exception => 0L }
-        val targetPerPartition = 2L << 20
-        val cap = spark.sessionState.conf.numShufflePartitions
-        math.max(2, math.min(cap.toLong, (bytes + targetPerPartition - 1) / targetPerPartition)).toInt
-      }
-    })
+    graft.Sizing.partitions(graft.Sizing.bytes(spark, s"$dir/events.parquet"),
+      2L << 20, spark.sessionState.conf.numShufflePartitions, floor = 2)
 
   /** Run `body` (a streaming start+await) with the derived state
     * partitioning and with Spark 4.1's checkpoint-file checksum layer OFF —
@@ -59,19 +49,17 @@ object Streams {
     * global mutation caveat as documented on [[streamingDistinct]]: the
     * engine runs streaming queries sequentially per session.
     */
-  private def withStreamShape[T](spark: SparkSession, dir: String)(body: => T): T = {
-    val conf = spark.conf
-    val pKey = "spark.sql.shuffle.partitions"
-    val cKey = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-    val prevP = conf.get(pKey)
-    val prevC = conf.getOption(cKey)
-    conf.set(pKey, statePartitions(spark, dir).toString)
-    conf.set(cKey, "false")
-    try body finally {
-      conf.set(pKey, prevP)
-      prevC match { case Some(v) => conf.set(cKey, v); case None => conf.unset(cKey) }
-    }
-  }
+  private def withStreamShape[T](spark: SparkSession, dir: String)(body: => T): T =
+    graft.Session.withConf(spark,
+      "spark.sql.shuffle.partitions" -> statePartitions(spark, dir).toString,
+      "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false")(body)
+
+  /** Run `body` on the RocksDB state-store provider (transformWithState's
+    * requirement), restoring the session's provider afterwards.
+    */
+  private def withRocksDb[T](spark: SparkSession)(body: => T): T =
+    graft.Session.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
 
   private def runToMemory(agg: DataFrame, mode: String, dir: String): DataFrame = {
     val spark = agg.sparkSession
@@ -443,11 +431,7 @@ object Streams {
     */
   def silentGaps(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb(spark) {
       val gapUs = 2L * 3600 * 1000000
       val src = eventStream(spark, dir)
         .withWatermark("ts", "0 seconds")
@@ -460,11 +444,6 @@ object Streams {
       runToMemory(gaps, "append", dir)
         .filter(col("gap_end_us") > 0L)
         .orderBy("event_type", "gap_start_us")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
@@ -487,11 +466,7 @@ object Streams {
     */
   def statefulUserTotalsV2(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb(spark) {
       val src = eventStream(spark, dir)
         .select(col("user_id"), col("value")).as[(Long, Double)]
       val updated = src.groupByKey(_._1)
@@ -504,11 +479,6 @@ object Streams {
         .filter(col("rn") === 1)
         .select(col("user_id"), col("n"), round(col("total"), 4).as("total"))
         .orderBy("user_id")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
@@ -597,11 +567,7 @@ object Streams {
     */
   def streamingDistinct(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb(spark) {
       val src = eventStream(spark, dir)
         .select(col("event_type"), col("user_id")).as[(String, Long)]
       val updated = src.groupByKey(_._1)
@@ -615,11 +581,6 @@ object Streams {
         .filter(col("rn") === 1)
         .select(col("event_type"), col("n_events"), col("distinct_users_est"))
         .orderBy("event_type")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
@@ -695,11 +656,7 @@ object Streams {
     */
   def streamingHllDistinct(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb(spark) {
       val src = eventStream(spark, dir)
         .select(col("event_type"), col("user_id")).as[(String, Long)]
       val updated = src.groupByKey(_._1)
@@ -714,11 +671,6 @@ object Streams {
         .select(col("event_type"), col("n_events"), col("denom_s"),
           col("v_zero"), col("est_e3"))
         .orderBy("event_type")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
@@ -751,11 +703,7 @@ object Streams {
   private val stateCkptStaged = new java.util.concurrent.ConcurrentHashMap[String, String]()
   def stateReaderHll(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb(spark) {
       val ckpt = stateCkptStaged.computeIfAbsent(s"s21|$dir", _ => {
         val path = s"${graft.RunScoped.ioDir}/s21_state_ckpt_${Integer.toHexString(dir.hashCode)}"
         val src = eventStream(spark, dir)
@@ -792,11 +740,6 @@ object Streams {
         .select(col("event_type"), col("n_events"), col("denom_s"),
           col("v_zero"), col("est_e3"))
         .orderBy("event_type")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
@@ -1247,9 +1190,7 @@ object Streams {
   private val kvSinkStaged = new java.util.concurrent.ConcurrentHashMap[String, String]()
   def kvSinkStream(spark: SparkSession, dir: String): DataFrame = {
     val table = kvSinkStaged.computeIfAbsent(dir, _ => {
-      spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-      spark.conf.set("spark.sql.catalog.graft.root",
-        s"${graft.RunScoped.ioDir}/catalog")
+      graft.Session.registerCatalog(spark)
       spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.db")
       val name = "graft.db.s23_sink_" + graft.ops.Stats.md5(dir).take(8)
       spark.sql(s"DROP TABLE IF EXISTS $name")

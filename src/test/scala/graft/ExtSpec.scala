@@ -3169,4 +3169,70 @@ class ExtSpec extends SparkSuite {
     assert(kernel === declarative)
     assert(kernel.nonEmpty)
   }
+
+  // ---- scale-adaptive spreads, both branches -------------------------------
+  // At the gate scale factors the docs and embedding spreads always fire;
+  // these runs force the other branches (no parallelism to add, scan
+  // already wide) and pin identical rows across all three.
+  // Widths of the hash spreads by `key` under `df`: repartition exchanges
+  // in the plan (through AQE stages and Layer caches), and shuffles in the
+  // lineage of an RDD-backed scan (a per-partition kernel's input).
+  private def spreadWidths(df: org.apache.spark.sql.DataFrame, key: String): Seq[Int] = {
+    import org.apache.spark.ShuffleDependency
+    import org.apache.spark.rdd.RDD
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{ExternalRDDScanExec, RDDScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    def shuffles(rdd: RDD[_]): Seq[Int] = rdd.dependencies.flatMap {
+      case s: ShuffleDependency[_, _, _] => s.partitioner.numPartitions +: shuffles(s.rdd)
+      case d => shuffles(d.rdd)
+    }
+    def walk(p: SparkPlan): Seq[SparkPlan] = p +: ((p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case c: InMemoryTableScanExec => Seq(c.relation.cachedPlan)
+      case _ => p.children
+    }) ++ p.subqueries).flatMap(walk)
+    walk(df.queryExecution.executedPlan).flatMap {
+      case s: ShuffleExchangeExec if s.shuffleOrigin == REPARTITION_BY_NUM => s.outputPartitioning match {
+        case h: HashPartitioning if h.references.exists(_.name == key) => Seq(h.numPartitions)
+        case _ => Nil
+      }
+      case r: ExternalRDDScanExec[_] => shuffles(r.rdd)
+      case r: RDDScanExec => shuffles(r.rdd)
+      case _ => Nil
+    }.distinct
+  }
+
+  // (query, the frame that carries the spread: the corpus stream x85
+  // joins, the Layer-cached moment sums x216 reads on the driver)
+  Seq(
+    ("x85 docs spread", "doc_id", 2,
+      (d: String) => TextAnalysis.unigramNll(spark, d),
+      (d: String) => TextAnalysis.tokenStream(spark, d)),
+    ("x216 embeddings spread", "vec_id", 4,
+      (d: String) => Similarity.screeReport(spark, d),
+      (d: String) => Similarity.momentSums(spark, d)),
+  ).foreach { case (name, key, width, query, carrier) =>
+    test(s"$name: spread, no spread and scan-already-wide give identical rows") {
+      def run(settings: (String, String)*): (Seq[org.apache.spark.sql.Row], Seq[Int]) =
+        graft.Session.withConf(spark, settings: _*) {
+          Layer.clear(spark)
+          val rows = query(sf).collect().toSeq
+          (rows, spreadWidths(carrier(sf), key))
+        }
+      val (spread, wSpread) = run()
+      val (narrow, wNarrow) = run("spark.sql.shuffle.partitions" -> "1")
+      val (wide, wWide) = run("spark.sql.files.maxPartitionBytes" -> "16k")
+      Layer.clear(spark)
+      assert(wSpread === Seq(width), "default session: the spread fires")
+      assert(wNarrow.isEmpty, "one shuffle partition: nothing to spread over")
+      assert(wWide.isEmpty, "16k scan splits: the scan is already wide")
+      assert(spread.nonEmpty)
+      assert(narrow === spread, "no-spread rows differ")
+      assert(wide === spread, "scan-wide rows differ")
+    }
+  }
 }

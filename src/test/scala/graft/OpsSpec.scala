@@ -2131,6 +2131,23 @@ class OpsSpec extends SparkSuite {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
+  test("q25 reclaims an orphaned table directory at the catalog's table location") {
+    // a previous JVM's tables are unknown to this in-memory catalog but
+    // still own their directories under the session's warehouse
+    val tag = s"${math.abs(sf.hashCode).toString}"
+    val before = graft.queries.Core.q25BucketedJoin(spark, sf).collect().toSeq
+    val t = s"graft_q25_orders_$tag"
+    spark.sessionState.catalog.dropTable(
+      org.apache.spark.sql.catalyst.TableIdentifier(t), ignoreIfNotExists = true, purge = false)
+    val loc = java.nio.file.Paths.get(spark.sessionState.catalog
+      .defaultTablePath(org.apache.spark.sql.catalyst.TableIdentifier(t)))
+    java.nio.file.Files.createDirectories(loc)
+    val orphan = loc.resolve("part-orphan.parquet")
+    java.nio.file.Files.writeString(orphan, "left by an earlier run")
+    assert(graft.queries.Core.q25BucketedJoin(spark, sf).collect().toSeq === before)
+    assert(!java.nio.file.Files.exists(orphan), "the orphaned file survived the rewrite")
+  }
+
   test("price elasticity matches the driver-side milli-nat moment recomputation") {
     val got = graft.queries.Analytics.priceElasticity(spark, sf).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getBoolean(3))).toMap

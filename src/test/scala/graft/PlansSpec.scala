@@ -398,4 +398,39 @@ class PlansSpec extends SparkSuite {
     assert(inBroadcastBand(4000000L), "the 4M budget is inclusive")
     assert(!inBroadcastBand(4000001L), "above 4M hub-routes")
   }
+
+  // ---- sizing and vocab gate laws ----------------------------------------
+  // One bytes→partitions rule serves the docs/embedding spreads, the
+  // stateful streaming shuffle and compaction; these pin its boundaries.
+  test("Sizing.partitions is ceil(bytes / target) clamped into [floor, cap]; spread skips a scan already wide") {
+    import graft.Sizing.{partitions, spread}
+    assert(partitions(0L, 32L, cap = 8L) === 1, "zero bytes get the floor")
+    assert(partitions(64L, 32L, cap = 8L) === 2, "an exact multiple adds no partition")
+    assert(partitions(65L, 32L, cap = 8L) === 3, "one byte over adds one")
+    assert(partitions(1000L, 32L, cap = 8L) === 8, "the cap clamps")
+    assert(partitions(0L, 2L << 20, cap = 32L, floor = 2L) === 2, "the state floor of 2")
+    assert(partitions(100L << 20, 2L << 20, cap = 1L, floor = 2L) === 2, "the floor wins over a lower cap")
+    assert(partitions(5L << 30, 128L << 20, cap = Int.MaxValue) === 40, "compaction: uncapped file count")
+    // the spread: 0 = the scan already splits at least as wide (inclusive)
+    assert(spread(64L, 32L, cap = 8L, maxPartitionBytes = 33L) === 2, "one scan split: spread")
+    assert(spread(64L, 32L, cap = 8L, maxPartitionBytes = 32L) === 0, "scan splits == width: skip")
+    assert(spread(1000L, 32L, cap = 8L, maxPartitionBytes = 125L) === 0, "scan as wide as the cap: skip")
+    assert(spread(1000L, 32L, cap = 8L, maxPartitionBytes = 126L) === 8, "one split short of the cap: spread")
+    // the gate fixtures: sf0.001 documents (65 515 B) and embeddings
+    // (193 646 B) at 32 KiB targets under 4 shuffle partitions
+    assert(spread(65515L, 32L << 10, cap = 4L, maxPartitionBytes = 128L << 20) === 2)
+    assert(spread(193646L, 32L << 10, cap = 4L, maxPartitionBytes = 128L << 20) === 4)
+    assert(spread(65515L, 32L << 10, cap = 1L, maxPartitionBytes = 128L << 20) === 1)
+    assert(spread(65515L, 32L << 10, cap = 4L, maxPartitionBytes = 16L << 10) === 0)
+    assert(spread(193646L, 32L << 10, cap = 4L, maxPartitionBytes = 16L << 10) === 0)
+  }
+
+  test("vocab broadcast gate is budget-inclusive") {
+    import graft.ext.TextAnalysis.{VocabBroadcastBudget, vocabFits}
+    assert(vocabFits(0L, budget = 100L))
+    assert(vocabFits(100L, budget = 100L), "rows == budget must broadcast (inclusive)")
+    assert(!vocabFits(101L, budget = 100L), "rows above the budget stay unhinted")
+    assert(VocabBroadcastBudget === 4000000L)
+    assert(vocabFits(4000000L) && !vocabFits(4000001L))
+  }
 }
